@@ -3,7 +3,10 @@
 Every implemented operator is declared here once as a named ``Query``: a Spark
 DataFrame builder plus (where SQL-expressible) the equivalent DuckDB oracle SQL.
 ``__spark_entry__.py`` derives its ``queries()`` / ``oracle_sql()`` contract
-directly from this registry, and ``bench.py`` runs the subset tagged "bench".
+directly from this registry. The subset tagged "bench" is the benchmark's
+query set: ``perfbench/run.py --workload olap_sql`` runs its tabular queries
+and ``--workload curation_udf`` the rest (see BENCHMARK.json and
+``perfbench/README.md``).
 
 Column-name discipline: the driver's comparator sorts columns by name before
 hashing values, so the Spark builder and the oracle SQL must produce identical

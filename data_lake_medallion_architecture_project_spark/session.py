@@ -7,8 +7,18 @@ matter when the same plans run on a 1000-executor cluster against ~100 TB:
 * AQE on — runtime shuffle-partition coalescing, skew-join splitting, and
   dynamic join-strategy demotion are the difference between a tuned and an
   untuned plan at scale.
-* ``spark.sql.shuffle.partitions`` — sized for local[32] testing; on a real
-  cluster AQE coalesces from a deliberately high initial number instead.
+* ``spark.sql.shuffle.partitions`` — 32 by default
+  (``SPARK_GRAFT_SHUFFLE_PARTITIONS``), a small-data setting that AQE
+  coalesces further; the benchmark runs it on ``local[nproc]``, 4 cores on the
+  host it was tuned on. On a real cluster pass a deliberately high initial
+  number and let AQE coalesce from there.
+* Generated-code cache sized to the working set — the engine re-runs the same
+  plans (every refresh cycle rebuilds the same Gold aggregates, analysts repeat
+  query shapes), and Spark's default cache of 100 compiled classes is smaller
+  than one pass: a pass over the 24 tabular bench queries needs about 420
+  classes, so at the default every pass recompiles all of them with Janino
+  and the JIT compiles the new classes again. ``CODEGEN_CACHE_ENTRIES`` holds
+  the measured set with headroom.
 * Arrow enabled — every pandas_udf / toPandas boundary is Arrow-batched.
 """
 
@@ -19,6 +29,14 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+# Entries of Spark's generated-code cache (``spark.sql.codegen.cache.maxEntries``,
+# a static conf; Spark's default is 100). An entry is one compiled class.
+# Measured working sets at sf0.01: about 420 classes per pass over the 24
+# tabular bench queries, about 770 over all 54 bench-tagged queries. 2048
+# keeps more than 2x headroom because one test session runs every query
+# family. Callers can override it through ``extra_conf``.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def get_spark(
@@ -46,6 +64,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # -- Codegen: keep every compiled class of the working set, so a
+        #    repeated plan reuses its classes instead of recompiling them.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # -- Joins: let the planner pick a shuffled-hash join when its size
         #    conditions hold (one side small per partition) instead of
         #    always sorting both sides (guide §3.1/§9). Not a local-only

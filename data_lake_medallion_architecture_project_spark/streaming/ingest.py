@@ -15,7 +15,9 @@ file source + checkpoint:
 * ``Trigger.AvailableNow`` gives the same scheduled-micro-batch cadence as the
   reference's 30-min Airflow DAG, but resumable and transactional;
 * each micro-batch runs the same domain cleaner used by batch mode —
-  one code path for validation semantics.
+  one code path for validation semantics — and runs it once: the batch's
+  row count is observed while the Silver write runs, not by a separate
+  ``count()`` job that would parse and deduplicate the batch a second time.
 
 At scale this is the Auto-Loader pattern: file listing is incremental,
 per-batch volume is bounded by ``maxFilesPerTrigger``, and the Silver write
@@ -25,9 +27,11 @@ stays append-only and partition-pruned.
 from __future__ import annotations
 
 import os
+import shutil
 from datetime import datetime, timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..plans.silver import CLEANERS
 from ..schemas import BRONZE_SCHEMAS
@@ -70,13 +74,22 @@ def run_incremental_ingest(
     written = {"rows": 0}
 
     def _sink(batch_df, batch_id: int) -> None:
-        cleaned = cleaner(batch_df, processed_at)
-        n = cleaned.count()
+        rows = Observation()
+        cleaned = cleaner(batch_df, processed_at).observe(rows, F.count(F.lit(1)).alias("n"))
+        # Idempotent: overwrite of the batchId-keyed subtree, so replay
+        # after a crash-before-checkpoint converges instead of duplicating.
+        path = write_silver_batch(cleaned, silver_root, domain, batch_id)
+        n = rows.get["n"]
         if n:
-            # Idempotent: overwrite of the batchId-keyed subtree, so replay
-            # after a crash-before-checkpoint converges instead of duplicating.
-            write_silver_batch(cleaned, silver_root, domain, batch_id)
             written["rows"] += n
+        else:
+            # An empty batch leaves no Silver directory behind, as if it
+            # had never been written.
+            shutil.rmtree(path)
+            try:
+                os.rmdir(os.path.dirname(path))
+            except OSError:  # the domain already holds earlier batches
+                pass
 
     query = (
         stream.writeStream.foreachBatch(_sink)

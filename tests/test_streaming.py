@@ -124,3 +124,41 @@ def test_full_medallion_flow_to_gold(spark, tmp_path):
         .first()[0]
     )
     assert abs(got - expected) <= 1.0
+
+
+def test_ingest_returns_rows_written(spark, tmp_path):
+    """The returned count is the rows the Silver write stored, duplicates in
+    the batch removed, and it accumulates over the micro-batches of one run."""
+    domain = "sales"
+    bronze, silver, ckpt = (str(tmp_path / p) for p in ("bronze", "silver", "ckpt"))
+    b1 = GENERATORS[domain](seed=3, n=40)
+    b2 = GENERATORS[domain](seed=4, n=25)
+    _write_bronze_csv(bronze, domain, b1 + b1[:7], "batch1")  # 7 duplicate rows
+    _write_bronze_csv(bronze, domain, b2, "batch2")
+    n = run_incremental_ingest(
+        spark, bronze, silver, ckpt, domain, processed_at=RUN_TS, max_files_per_trigger=1
+    )
+    stored = spark.read.parquet(os.path.join(silver, domain))
+    assert n == stored.count() == len({r["sale_id"] for r in b1 + b2})
+    assert stored.select("ingest_batch").distinct().count() == 2
+
+
+def test_ingest_empty_batch_writes_nothing(spark, tmp_path):
+    """A Bronze file with a header and no rows is consumed as an empty
+    micro-batch: 0 rows returned and no Silver files left behind. The next
+    non-empty batch then lands as usual."""
+    domain = "inventory"
+    bronze, silver, ckpt = (str(tmp_path / p) for p in ("bronze", "silver", "ckpt"))
+    _write_bronze_csv(bronze, domain, [], "empty")
+    assert run_incremental_ingest(spark, bronze, silver, ckpt, domain, processed_at=RUN_TS) == 0
+    assert not os.path.exists(os.path.join(silver, domain))
+
+    b1 = GENERATORS[domain](seed=5, n=20)
+    _write_bronze_csv(bronze, domain, b1, "batch1")
+    n = run_incremental_ingest(spark, bronze, silver, ckpt, domain, processed_at=RUN_TS)
+    assert n == len({r["movement_id"] for r in b1})
+
+    # An empty batch after real ones keeps the earlier batches intact.
+    _write_bronze_csv(bronze, domain, [], "empty2")
+    assert run_incremental_ingest(spark, bronze, silver, ckpt, domain, processed_at=RUN_TS) == 0
+    assert spark.read.parquet(os.path.join(silver, domain)).count() == n
